@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import scala.collection.mutable
 
 /** Per-job profiler for a single registered query: runs the query like
@@ -8,6 +10,10 @@ import scala.collection.mutable
   * a listener that prints every Spark job's wall time, task count and
   * call site — the attribution tool for "where do this query's seconds
   * go": one dominant stage, or a long tail of per-job scheduling floor.
+  * It also prints how many whole-stage codegen classes the timed run
+  * compiled and their compile time: after the warm pass a query should
+  * compile next to nothing, so a high count means the codegen cache is
+  * thrashing again (see GraftSession).
   *
   * Usage: `graft.Profile <queryName> [sfDir]` (env SPARK_GRAFT_SF_DIR
   * also honored). Diagnostic only — not part of the driver contract.
@@ -56,9 +62,13 @@ object Profile {
     val timer = new JobTimer
     spark.sparkContext.addSparkListener(timer)
     timer.enabled = true
+    val cg0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val cgNs0 = CodeGenerator.compileTime
     val t0 = System.nanoTime()
     fn(spark, sfDir).write.mode("overwrite").format("noop").save()
     val total = (System.nanoTime() - t0) / 1e9
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - cg0
+    val compileS = (CodeGenerator.compileTime - cgNs0) / 1e9
     timer.enabled = false
     // listener bus is async — give it a moment to drain before reading
     Thread.sleep(500)
@@ -73,6 +83,7 @@ object Profile {
     }
     val jobSum = timer.jobs.values.map(j => (j.end - j.start) / 1e3).sum
     println(f"jobs=${timer.jobs.size}  jobSum=$jobSum%.3f s  driverGaps=${total - jobSum}%.3f s")
+    println(f"codegen: $compiled classes compiled, $compileS%.3f s compile time")
     println(f"%n${"stage"}%6s ${"wall"}%7s ${"cpu"}%7s ${"run"}%7s ${"tasks"}%6s ${"inRows"}%9s ${"outRows"}%9s  name")
     timer.stages.sortBy(-_.runMs).take(15).foreach { s =>
       println(f"${s.id}%6d ${s.wallMs / 1e3}%7.3f ${s.cpuMs / 1e3}%7.3f ${s.runMs / 1e3}%7.3f ${s.tasks}%6d ${s.inRows}%9d ${s.outRows}%9d  ${s.name.take(60)}")

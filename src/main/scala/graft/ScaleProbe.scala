@@ -43,7 +43,7 @@ object ScaleProbe {
           spark.range(0, k).select(col("id").cast("long").as("__r")))
         .withColumn("doc_id", col("doc_id") * k + col("__r"))
         // one replica-unique trailing token breaks EXACT-duplicate
-        // groups across replicas (a replica pair still reads ~n/(n+1)
+        // groups across replicas (a replica pair still reads ~n/(n+2)
         // token Jaccard, so the ≥0.9 MinHash output legitimately grows
         // quadratically in replica count — a data property, reported
         // as such; the claim under test is the BAND/DIGEST shuffle,
@@ -53,7 +53,8 @@ object ScaleProbe {
     }
     // Dissimilar-replica corpus for the q24 INFRASTRUCTURE probe: four
     // replica-unique trailing tokens push a replica pair's token
-    // Jaccard to ~n/(n+4) < 0.9 for the ~23-token docs here, so the
+    // Jaccard to ~n/(n+8) < 0.9 for the ~23-token docs here (each side
+    // adds four tokens the other lacks, so the union is n+8), so the
     // ≥ 0.9 OUTPUT stays ~1×-sized and what's measured is the
     // band/signature shuffle alone. The default replica (one unique
     // token, still ≥ 0.9 similar) keeps its quadratic output BY

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Log corpus sources — S1/S2 in SURVEY.md §2.1.
+/** Log corpus sources — S1 in SURVEY.md §2.1 (S2, one flat file, is
+  * `spark.read.text(path)` under the same order keys).
   *
   * The reference walks a directory tree keeping files named
   * `container_*.log` and reads each line in file order
@@ -31,10 +32,6 @@ object LogSource {
       .option("pathGlobFilter", glob)
       .text(dir)
       .withColumn("file", input_file_name())
-
-  /** S2: single flat file, order preserved by the same explicit key. */
-  def readLogFile(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path).withColumn("file", input_file_name())
 
   /** W1: explicit `(file, line_no)` order key (1-based within each file).
     * One reducer per file — right for container-log trees (many modest

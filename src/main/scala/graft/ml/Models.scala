@@ -168,17 +168,6 @@ object Models {
   }
 
   // ----------------------------------------------------------------- L10
-  /** PCA projection to k components: returns input + `pc` array column. */
-  def pcaProject(df: DataFrame, featureCols: Seq[String], k: Int): DataFrame = {
-    val assembled = new VectorAssembler().setInputCols(featureCols.toArray)
-      .setOutputCol("__features").transform(df)
-    val model = new PCA().setK(k).setInputCol("__features").setOutputCol("__pc")
-      .fit(assembled)
-    model.transform(assembled)
-      .withColumn("pc", vector_to_array(col("__pc")))
-      .drop("__features", "__pc")
-  }
-
   /** PCA over an existing Array[Float] embedding column. */
   def pcaProjectArray(df: DataFrame, vecCol: String, k: Int): DataFrame = {
     val spark = df.sparkSession

@@ -67,15 +67,17 @@ object PinnedPca {
     // covariance cross-products: exact integer sums over the corpus
     // (the only dim²-keyed shuffle), normalized to real units (/1e18)
     // and by n (magnitude bound at any corpus size). The per-row
-    // PRODUCT runs in LONG (the PinnedAls headroom precedent): two 1e-9
-    // grid coordinates multiply to ≤ ~1.4e18 for |x| ≤ 3 — far above
-    // any unit-normalized embedding (this corpus: |x| < 0.6) and with
-    // 6× headroom below 2^63; an overflow would fail the oracle
-    // loudly, never pass it. Only the cross-row SUM needs decimal
-    // width, so each row pays one long multiply + one decimal add
-    // instead of two long→decimal conversions + a decimal multiply +
-    // the add — profiled 8.9 CPU-s → see OPTIMIZATION_r14.md (this was
-    // the hottest stage of the query, 512 k products at sf0.1).
+    // PRODUCT runs in LONG (the PinnedAls precedent): two centred 1e-9
+    // grid coordinates multiply to |c9|² ≈ 9e18 at |c9| ≈ 3e9, which is
+    // about 2^63 — no headroom there. Unit-normalized embeddings stay
+    // well below it (this corpus: |x| < 0.6, so |c9| < 1.2e9 and
+    // products < 1.5e18), but past |c9| ≈ 3.04e9 the non-ANSI long
+    // multiply wraps SILENTLY and yields a wrong covariance, not an
+    // error. Only the cross-row SUM needs decimal width, so each row
+    // pays one long multiply + one decimal add instead of two
+    // long→decimal conversions + a decimal multiply + the add —
+    // profiled 8.9 CPU-s → see OPTIMIZATION_r14.md (this was the
+    // hottest stage of the query, 512 k products at sf0.1).
     val cRows = cx.alias("a").join(cx.alias("b"), col("a.id") === col("b.id"))
       .groupBy(col("a.j").as("j"), col("b.j").as("jk"))
       .agg(sum(d38(col("a.c9") * col("b.c9"))).as("s"))

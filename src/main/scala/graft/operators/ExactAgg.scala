@@ -40,9 +40,6 @@ object ExactAgg {
       sum(v6 % lit(1000000000L)).cast("double")
   }
 
-  /** The unrounded sum as a double (`raw / 1e6`). */
-  def dsumUnrounded(c: Column): Column = splitSumRaw(c) / lit(1000000.0)
-
   private def pow10(k: Int): Double = math.pow(10.0, k)
 
   /** Order-invariant `round(sum(x), scale)` as a double.

@@ -128,7 +128,8 @@ object Sinks {
     *  - failure-distribution bar chart (`data_display.py:4-17`,
     *    `process_logs_v10.py:186-214`; v10 labels every 5th event id,
     *    recorded as `xtickEvery`);
-    *  - PCA scatter colored by class label (`process_logs_v10.py:441-449`).
+    *  - PCA scatter colored by class label (`process_logs_v10.py:441-449`):
+    *    `writeChartData(proj, path, "scatter", "pc1", "pc2", Some("label"))`.
     */
   def writeChartData(df: DataFrame, path: String, kind: String,
                      x: String, y: String, color: Option[String] = None,
@@ -156,11 +157,6 @@ object Sinks {
   def chartFailureBar(dist: DataFrame, path: String): Unit =
     writeChartData(dist, path, "bar", dist.columns(0), dist.columns(1),
       title = "Distribution Des Événements", xtickEvery = 5)
-
-  /** The reference's PCA scatter (`pc1`, `pc2`, colored by `label`). */
-  def chartPcaScatter(proj: DataFrame, path: String): Unit =
-    writeChartData(proj, path, "scatter", "pc1", "pc2", color = Some("label"),
-      title = "PCA")
 
   def saveTemplates(templates: Dataset[EventTemplate], path: String): Unit =
     templates.write.mode("overwrite").parquet(path)
