@@ -82,6 +82,12 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
+      // ANSI mode pinned, not left to Spark's default (true in 4.x, but
+      // SPARK_ANSI_SQL_MODE=false flips it): the pinned-integer operators
+      // (PinnedAls Gram sums, PinnedPca products) multiply and sum in
+      // `long`, and ANSI makes an overflow there throw
+      // ARITHMETIC_OVERFLOW instead of wrapping into a wrong answer.
+      .config("spark.sql.ansi.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.retainedStages", RetainedUiEntries.toString)

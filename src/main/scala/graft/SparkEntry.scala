@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.sources.Tables
+import graft.sources.{ParquetReader, Tables}
 import graft.logs.LogLines
 import graft.mine.TemplateMining
 import graft.operators.{EventMatrix, Positional, RangeJoin, Sketches, Temporal}
@@ -1991,7 +1991,7 @@ object SparkEntry {
     //      tumbling-window wide report under genuine streaming execution
     "q162_stream_expectations" -> ((s, dir) => {
       val path = s"${dir.stripSuffix("/")}/events.parquet"
-      val schema = s.read.parquet(path).schema
+      val schema = ParquetReader.read(s, path).schema
       graft.streaming.StreamingOps.runToMemory(s, src =>
           graft.analyze.Expectations.windowedWide(
             Tables.normalizeTs(src, "ts"), "ts", "1 day", Seq(
@@ -2585,7 +2585,7 @@ object SparkEntry {
     //      oracle is the plain batch join (streaming must change nothing)
     "q95_stream_enrich" -> ((s, dir) => {
       val path = s"${dir.stripSuffix("/")}/events.parquet"
-      val schema = s.read.parquet(path).schema
+      val schema = ParquetReader.read(s, path).schema
       graft.streaming.StreamingOps.runToMemory(s, src => {
           val dim = Tables.customer(src.sparkSession, dir)
             .select(col("c_custkey"), col("c_mktsegment"))
@@ -3189,7 +3189,7 @@ object SparkEntry {
     //      answer and oracle as the batch q62
     "q74_stream_heavy_hitters" -> ((s, dir) => {
       val path = s"${dir.stripSuffix("/")}/documents.parquet"
-      val schema = s.read.parquet(path).schema
+      val schema = ParquetReader.read(s, path).schema
       val emissions = graft.streaming.StreamingOps.runToMemory(s, src => {
           import s.implicits._
           val toks = src
@@ -3465,7 +3465,7 @@ object SparkEntry {
     //      result — DuckDB-oracled via date_trunc
     "q39_stream_window" -> ((s, dir) => {
       val path = s"${dir.stripSuffix("/")}/events.parquet"
-      val schema = s.read.parquet(path).schema
+      val schema = ParquetReader.read(s, path).schema
       graft.streaming.StreamingOps.runToMemory(s, src =>
           graft.streaming.StreamingOps.windowedCounts(
             Tables.normalizeTs(src, "ts"),
@@ -3477,7 +3477,7 @@ object SparkEntry {
     //      flatMapGroupsWithState (rows-only)
     "q40_stream_mine" -> ((s, dir) => {
       val path = s"${dir.stripSuffix("/")}/documents.parquet"
-      val schema = s.read.parquet(path).schema
+      val schema = ParquetReader.read(s, path).schema
       graft.streaming.StreamingOps.runToMemory(s, src => {
           import s.implicits._
           val lines = src.select(pmod(col("doc_id"), lit(4)).cast("int").as("shard"),
@@ -3594,7 +3594,7 @@ object SparkEntry {
     //      → one micro-batch → watermarking drops nothing)
     "q50_stream_join" -> ((s, dir) => {
       val path = s"${dir.stripSuffix("/")}/events.parquet"
-      val schema = s.read.parquet(path).schema
+      val schema = ParquetReader.read(s, path).schema
       graft.streaming.StreamingOps.runToMemory(s, src => {
           val ev = Tables.normalizeTs(src, "ts")
           val errors = ev.filter(col("event_type") === "error")
@@ -3617,7 +3617,7 @@ object SparkEntry {
     //      mode → nothing dropped).
     "q58_stream_session" -> ((s, dir) => {
       val path = s"${dir.stripSuffix("/")}/events.parquet"
-      val schema = s.read.parquet(path).schema
+      val schema = ParquetReader.read(s, path).schema
       graft.streaming.StreamingOps.runToMemory(s, src => {
           val ev = Tables.normalizeTs(src, "ts")
           ev.groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
@@ -3716,14 +3716,19 @@ object SparkEntry {
   /** Materialize the documents table as a `container_NN.log` directory —
     * the on-disk corpus shape the reference's E1/E2 program consumes. The
     * write is DISTRIBUTED (spark text write; the follow-up rename touches
-    * file metadata only, never row data) and cached per sf dir behind a
-    * ready marker, so repeated queries reuse it. */
+    * file metadata only, never row data) and cached behind a ready marker
+    * per sf dir AND per documents listing (the digest of its files' paths,
+    * lengths and modification times), so repeated queries reuse it and a
+    * table rewritten at the same path gets a corpus of its own. */
   private def logCorpusDir(s: SparkSession, dir: String): String = {
+    val docs = Tables.documents(s, dir)
     val slug = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"), s"graft_logcorpus_$slug")
+    val listing = ParquetReader.listingDigest(docs).take(16)
+    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_logcorpus_${slug}_$listing")
     val marker = new java.io.File(root, "_GRAFT_READY")
     if (!marker.exists()) {
-      Tables.documents(s, dir)
+      docs
         .select(concat(lit("2015-10-17 15:37:56,547 INFO [main] worker.Task: "),
           col("text")).as("value"))
         .repartition(4)

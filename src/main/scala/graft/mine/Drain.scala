@@ -47,9 +47,11 @@ final class DrainTree(
   private val root = new Node
   private var counter = 0L
 
-  /** Access-ordered so that `maxClusters` eviction is least-recently-USED,
-    * not least-recently-created. */
-  private val idToCluster = new java.util.LinkedHashMap[java.lang.Long, Cluster](64, 0.75f, true) {
+  /** Access-ordered when `maxClusters > 0`, so that eviction is
+    * least-recently-USED, not least-recently-created. Unbounded trees keep
+    * insertion order: an access-ordered `get` relinks the map, and a
+    * broadcast tree is probed by every executor thread at once. */
+  private val idToCluster = new java.util.LinkedHashMap[java.lang.Long, Cluster](64, 0.75f, maxClusters > 0) {
     override def removeEldestEntry(e: java.util.Map.Entry[java.lang.Long, Cluster]): Boolean =
       maxClusters > 0 && size() > maxClusters
   }
@@ -210,8 +212,8 @@ final class DrainTree(
   /** J1: read-only probe — which cluster owns this line? Wildcards count
     * as matching positions (the Drain3 `match()` semantics). Returns the
     * cluster id or -1 (the engine keeps unmatched lines with a null event
-    * id — SURVEY.md §2.8). Thread-safe ONLY if `maxClusters == 0` (no LRU
-    * mutation on reads is needed then). */
+    * id — SURVEY.md §2.8). Thread-safe ONLY if `maxClusters == 0`: the
+    * cluster map is then insertion-ordered and a probe writes nothing. */
   def matchLine(content: String): Long = {
     val tokens = tokenize(content)
     val c = treeSearch(tokens, includeParams = true)

@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   *    `(1.0, ((item % 1000) + 1)/1000)` — deterministic, engine-pure
   *    arithmetic, non-collinear across items;
   *  - the Gram sums `Σv², Σv·v, Σr·v` are LONG sums of long products
-  *    (the twin uses HUGEINT; `solveSide`'s headroom analysis shows the
-  *    long sums cannot overflow at any plausible key cardinality, and an
-  *    overflow would fail the oracle loudly, never pass it);
+  *    (the twin uses HUGEINT; see `solveSide` for the headroom). The
+  *    session runs in ANSI mode ([[graft.GraftSession]] pins it), so a
+  *    product or sum past 2^63 throws ARITHMETIC_OVERFLOW; it never
+  *    wraps into a wrong factor;
   *  - the solve runs in IEEE double over those exact integers with the
   *    twin's operation order (`det = a11·a22 − a12²` with λ added to the
   *    diagonal first), and pins straight back to the grid. λ > 0 keeps
@@ -35,9 +36,11 @@ object PinnedAls {
     * Gram sums run in LONG (not decimal — profiled 3 CPU-s/stage of
     * BigDecimal per-row cost): a factor on the 1e-6 grid sits at ~1e6·
     * O(rating scale), so a per-term square is ≤ ~1e16 and the per-group
-    * sum keeps ≥ 10^2 headroom below 2^63 even at 10^6 ratings per key;
-    * the twin's HUGEINT sums are equal wherever long doesn't overflow,
-    * and an overflow would fail the oracle loudly, never pass it. */
+    * sum stays below 2^63 up to ~9·10^2 such terms per key at that
+    * magnitude (~9.2·10^6 at unit factors); the twin's HUGEINT sums are
+    * equal wherever long doesn't overflow. Past that, the session's
+    * ANSI mode makes the multiply or the sum throw ARITHMETIC_OVERFLOW
+    * (pinned by PinnedOverflowSpec); nothing wraps silently. */
   private def solveSide(r: DataFrame, f: DataFrame, joinKey: String,
                         groupKey: String, lambda: Double): DataFrame = {
     val sums = r.join(f, joinKey)

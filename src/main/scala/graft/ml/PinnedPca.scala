@@ -71,9 +71,11 @@ object PinnedPca {
     // grid coordinates multiply to |c9|² ≈ 9e18 at |c9| ≈ 3e9, which is
     // about 2^63 — no headroom there. Unit-normalized embeddings stay
     // well below it (this corpus: |x| < 0.6, so |c9| < 1.2e9 and
-    // products < 1.5e18), but past |c9| ≈ 3.04e9 the non-ANSI long
-    // multiply wraps SILENTLY and yields a wrong covariance, not an
-    // error. Only the cross-row SUM needs decimal width, so each row
+    // products < 1.5e18). Past |c9| ≈ 3.04e9 the long multiply
+    // overflows, and the session's pinned ANSI mode (GraftSession) makes
+    // it throw ARITHMETIC_OVERFLOW rather than wrap into a wrong
+    // covariance (pinned by PinnedOverflowSpec). Only the cross-row SUM needs
+    // decimal width, so each row
     // pays one long multiply + one decimal add instead of two
     // long→decimal conversions + a decimal multiply + the add —
     // profiled 8.9 CPU-s → see OPTIMIZATION_r14.md (this was the

@@ -32,7 +32,7 @@ object ResultCache {
     val path = Paths.get(cacheDir, key)
     if (!Files.exists(path.resolve("_SUCCESS")))
       df.write.mode("overwrite").parquet(path.toString)
-    spark.read.parquet(path.toString)
+    ParquetReader.read(spark, path.toString)
   }
 
   /** True iff a result for this plan is already materialized. */

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 
 import graft.mine.EventTemplate
 
@@ -84,13 +84,16 @@ object Sinks {
       .write.mode("overwrite").parquet(path)
   }
 
-  /** Parquet source with optional schema pinning (inference is an extra
-    * scan) and `mergeSchema` for layouts whose files were written under
-    * EVOLVED schemas (new nullable columns appear over a corpus' life;
-    * merged read presents the union, nulls where absent). */
+  /** Parquet source. The default read goes through [[ParquetReader]],
+    * which infers the schema once and reuses it while the files are
+    * unchanged. `mergeSchema = true` is for layouts whose files were
+    * written under EVOLVED schemas (new nullable columns appear over a
+    * corpus' life; the merged read presents the union, nulls where
+    * absent); it reads every footer, every time. */
   def readParquet(spark: SparkSession, path: String,
                   mergeSchema: Boolean = false): DataFrame =
-    spark.read.option("mergeSchema", mergeSchema.toString).parquet(path)
+    if (mergeSchema) spark.read.option("mergeSchema", "true").parquet(path)
+    else ParquetReader.read(spark, path)
 
   /** Small-file COMPACTION: rewrite a directory into ~`targetBytes`
     * files. Streaming ingest and high-cardinality partitioned writes
@@ -102,7 +105,7 @@ object Sinks {
     * rewrite to a sibling dir. Returns the output file count. */
   def compact(spark: SparkSession, inPath: String, outPath: String,
               targetBytes: Long = 128L * 1024 * 1024): Int = {
-    val df = spark.read.parquet(inPath)
+    val df = ParquetReader.read(spark, inPath)
     // size from the ACTUAL on-disk bytes, not optimizedPlan.stats: the
     // plan statistic is the uncompressed in-memory estimate — several
     // times the parquet size — which would undershoot targetBytes per
@@ -161,8 +164,10 @@ object Sinks {
   def saveTemplates(templates: Dataset[EventTemplate], path: String): Unit =
     templates.write.mode("overwrite").parquet(path)
 
-  def loadTemplates(spark: SparkSession, path: String): Dataset[EventTemplate] = {
-    import spark.implicits._
-    spark.read.parquet(path).as[EventTemplate]
-  }
+  /** Reads the state [[saveTemplates]] wrote. Its schema is the
+    * `EventTemplate` encoder's, so it is given, not inferred: the read
+    * runs no schema-inference job. */
+  def loadTemplates(spark: SparkSession, path: String): Dataset[EventTemplate] =
+    spark.read.schema(Encoders.product[EventTemplate].schema).parquet(path)
+      .as(Encoders.product[EventTemplate])
 }

@@ -29,7 +29,7 @@ import scala.jdk.CollectionConverters._
   *
   * Scale shape: the manifest is O(files), read on the driver once per
   * query; the data path is ordinary distributed parquet scan/write with
-  * all pushdowns intact (`spark.read.parquet(files*)`). Local-FS rename
+  * all pushdowns intact (`ParquetReader.read(spark, files*)`). Local-FS rename
   * semantics stand in for an object store's conditional PUT.
   */
 object Versioned {
@@ -91,6 +91,6 @@ object Versioned {
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"version $v not in $vs")
     val files = readManifest(root, v).map(rel => Paths.get(root, rel).toString)
-    spark.read.parquet(files: _*)
+    ParquetReader.read(spark, files: _*)
   }
 }

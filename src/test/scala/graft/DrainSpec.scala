@@ -134,6 +134,25 @@ class DrainPropertySpec extends AnyFunSuite {
     assert(t.matchLine("") == -1L)
   }
 
+  test("probing an unbounded tree writes nothing: its serialized form is unchanged") {
+    // a broadcast tree is probed by every executor thread at once, so a
+    // probe must not relink the cluster map (an access-ordered map does,
+    // and its iteration order, which serialization records, moves)
+    val t = DrainConfig().newTree()
+    val lines = Seq("alpha one", "beta two three", "gamma four five six")
+    lines.foreach(t.addLogMessage)
+    def bytes: Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream
+      val oos = new java.io.ObjectOutputStream(out)
+      oos.writeObject(t); oos.close()
+      out.toByteArray
+    }
+    val before = bytes
+    assert(lines.forall(l => t.matchLine(l) > 0))
+    assert(t.matchLine(lines.head) > 0)
+    assert(java.util.Arrays.equals(bytes, before), "a probe changed the tree's serialized form")
+  }
+
   test("LRU cap bounds cluster state") {
     val t = new DrainTree(maxClusters = 10)
     (0 until 100).foreach(i => t.addLogMessage(s"unique_shape_$i with tail ${"x" * (i % 3)} ${"y" * (i % 7)} ${"z" * (i % 11)} pad$i end"))
