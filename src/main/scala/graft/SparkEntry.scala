@@ -1785,10 +1785,9 @@ object SparkEntry {
     // ---- SQL surface: LATERAL VIEW explode + correlated EXISTS — the
     //      spark.sql front door over the same tables (q41's sibling for
     //      nested/correlated shapes)
-    "q184_sql_lateral" -> ((s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("documents_v")
-      Tables.events(s, dir).createOrReplaceTempView("events_v")
-      s.sql("""
+    "q184_sql_lateral" -> ((s, dir) =>
+      withTempViews(s, "documents_v" -> Tables.documents(s, dir),
+          "events_v" -> Tables.events(s, dir))(s.sql("""
         SELECT t.token, count(*) AS n
         FROM documents_v d
         LATERAL VIEW explode(split(lower(trim(d.text)), '\\s+')) t AS token
@@ -1797,8 +1796,7 @@ object SparkEntry {
                       WHERE e.user_id = d.doc_id % 100 AND e.event_type = 'purchase')
         GROUP BY t.token
         ORDER BY n DESC, t.token
-        LIMIT 20""")
-    }),
+        LIMIT 20"""))),
     // ---- Pareto contribution cut ("which sources cover 80% of the
     //      mass"): exact 6-dp totals, cumulative share on the
     //      |groups|-row frame, boundary group INCLUDED (first group whose
@@ -2275,7 +2273,6 @@ object SparkEntry {
     //      frequency > n/32. The sketch never shuffles the vocabulary;
     //      the rescan makes the answer exact, not approximate.
     "q62_heavy_hitters" -> ((s, dir) => {
-      graft.functions.MisraGries.register(s)
       val toks = Tables.documents(s, dir)
         .select(explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
       // candidate guarantee: true freq > n/64 => present in MG(63) state;
@@ -2382,7 +2379,6 @@ object SparkEntry {
       // repartitionByRange boundary sampling executes it an extra time
       val docs = graft.operators.Spread.widen(
         Tables.documents(s, dir), col("doc_id"))
-      graft.functions.RepStats.register(s)
       val perDoc = docs.select(col("doc_id"), col("source"),
           TextAnalysis.qualityScore(col("text")).as("quality"),
           call_function(graft.functions.RepStats.Name,
@@ -2544,9 +2540,8 @@ object SparkEntry {
     // ---- GROUPING SETS via the SQL surface: the explicit-sets sibling of
     //      ROLLUP (q46) / CUBE (q57), grouping() flags disambiguate the
     //      all-null super-aggregate rows
-    "q92_grouping_sets" -> ((s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("events")
-      s.sql("""WITH e AS (
+    "q92_grouping_sets" -> ((s, dir) =>
+      withTempViews(s, "events" -> Tables.events(s, dir))(s.sql("""WITH e AS (
                  SELECT event_type, user_id % 7 AS user_bucket, value FROM events)
                SELECT event_type, user_bucket,
                       CAST(grouping(event_type) AS BIGINT) AS g_type,
@@ -2555,8 +2550,7 @@ object SparkEntry {
                       CAST(round((CAST(sum(CAST(round((value) * 1000000) AS BIGINT) div 1000000000) AS DOUBLE) * 1000000000.0 + CAST(sum(CAST(round((value) * 1000000) AS BIGINT) % 1000000000) AS DOUBLE)) / 100.0) / 10000.0 AS DOUBLE) AS sum_value
                FROM e GROUP BY GROUPING SETS ((event_type), (user_bucket), ())
                ORDER BY g_type, g_bucket,
-                        event_type ASC NULLS FIRST, user_bucket ASC NULLS FIRST""")
-    }),
+                        event_type ASC NULLS FIRST, user_bucket ASC NULLS FIRST"""))),
     // ---- per-group winsorization: exact [p05, p95] percentile clamp —
     //      outlier treatment that keeps the row (dropping would bias the
     //      sample); cut table is the only aggregation, clamp is scan-speed
@@ -2944,7 +2938,6 @@ object SparkEntry {
     //      file-pruning layout (StorageLayoutSpec proves the pruning;
     //      this query pins the curve itself against DuckDB bit arithmetic)
     "q146_zorder" -> ((s, dir) => {
-      graft.functions.ZValue.register(s)
       Tables.orders(s, dir)
         .select(col("o_orderkey"), (col("o_custkey") % 65536L).as("x"),
           (col("o_orderkey") % 65536L).as("y"))
@@ -3079,7 +3072,6 @@ object SparkEntry {
     //      ranking-window formulation shuffles EVERY row and sorts each
     //      group (hottest group = slowest task); the heap is exact
     "q102_topk_native" -> ((s, dir) => {
-      graft.functions.TopK.register(s)
       Tables.events(s, dir)
         .groupBy(col("event_type"))
         .agg(call_function(graft.functions.TopK.Name,
@@ -3491,13 +3483,11 @@ object SparkEntry {
     }),
     // ---- SQL-string entry surface: the engine's tables queried via
     //      spark.sql with the SAME text the DuckDB oracle runs
-    "q41_sql_surface" -> ((s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("events")
-      s.sql("""SELECT event_type, count(*) AS n,
+    "q41_sql_surface" -> ((s, dir) =>
+      withTempViews(s, "events" -> Tables.events(s, dir))(s.sql("""SELECT event_type, count(*) AS n,
                round((CAST(sum(CAST(round((value) * 1000000) AS BIGINT) div 1000000000) AS DOUBLE) * 1000000000.0 + CAST(sum(CAST(round((value) * 1000000) AS BIGINT) % 1000000000) AS DOUBLE)) / 100.0 / count(*)) / 10000.0 AS avg_value
                FROM events WHERE user_id % 2 = 0
-               GROUP BY event_type ORDER BY event_type""")
-    }),
+               GROUP BY event_type ORDER BY event_type"""))),
     // ---- distribution stats: exact percentiles + distinct counts per source
     "q42_distribution_stats" -> ((s, dir) =>
       Tables.documents(s, dir)
@@ -3701,17 +3691,24 @@ object SparkEntry {
     //      map-side, kilobyte tree state through the shuffle. Rows-only
     //      (cluster splits are merge-order-dependent); mass conservation
     //      is the spec'd invariant (MineAggSpec).
-    "q49_group_mine" -> ((s, dir) => {
-      graft.mine.DrainMineAgg.register(s)
-      Tables.documents(s, dir).createOrReplaceTempView("documents")
-      s.sql("""WITH mined AS (
+    "q49_group_mine" -> ((s, dir) =>
+      withTempViews(s, "documents" -> Tables.documents(s, dir))(s.sql("""WITH mined AS (
                  SELECT source, graft_mine(text) AS ts
                  FROM documents GROUP BY source)
                SELECT source, size(ts) AS n_clusters,
                       aggregate(ts, CAST(0 AS BIGINT), (acc, x) -> acc + x.size) AS mass
-               FROM mined ORDER BY source""")
-    }),
+               FROM mined ORDER BY source"""))),
   )
+
+  /** Run `query` (a `spark.sql` over the given temp views) and drop the
+    * views once it returns. The DataFrame is analyzed by then, so it
+    * keeps its rows while the caller's session keeps no view pointing at
+    * this `dir`. */
+  private def withTempViews(s: SparkSession, views: (String, DataFrame)*)(
+      query: => DataFrame): DataFrame = {
+    views.foreach { case (name, df) => df.createOrReplaceTempView(name) }
+    try query finally views.foreach { case (name, _) => s.catalog.dropTempView(name) }
+  }
 
   /** Materialize the documents table as a `container_NN.log` directory —
     * the on-disk corpus shape the reference's E1/E2 program consumes. The
@@ -3719,15 +3716,21 @@ object SparkEntry {
     * file metadata only, never row data) and cached behind a ready marker
     * per sf dir AND per documents listing (the digest of its files' paths,
     * lengths and modification times), so repeated queries reuse it and a
-    * table rewritten at the same path gets a corpus of its own. */
+    * table rewritten at the same path gets a corpus of its own. Building
+    * one deletes the dir's corpora of older listings. */
   private def logCorpusDir(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
-    val slug = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val prefix = s"graft_logcorpus_${dir.replaceAll("[^A-Za-z0-9]", "_")}_"
     val listing = ParquetReader.listingDigest(docs).take(16)
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_logcorpus_${slug}_$listing")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val root = new java.io.File(tmp, prefix + listing)
     val marker = new java.io.File(root, "_GRAFT_READY")
     if (!marker.exists()) {
+      // exactly prefix + 16 hex: a longer slug sharing this prefix is
+      // another dir's corpus
+      val stale = (java.util.regex.Pattern.quote(prefix) + "[0-9a-f]{16}").r
+      tmp.listFiles().filter(f => f != root && stale.matches(f.getName))
+        .foreach(f => org.apache.commons.io.FileUtils.deleteDirectory(f))
       docs
         .select(concat(lit("2015-10-17 15:37:56,547 INFO [main] worker.Task: "),
           col("text")).as("value"))

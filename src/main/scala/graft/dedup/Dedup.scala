@@ -306,20 +306,9 @@ object Dedup {
     * components). Uses the native codegen'd agreement count — the
     * `zip_with`/`filter` built-in formulation runs interpreted and
     * allocates two arrays per pair, which dominates verification cost at
-    * millions of candidates.
-    *
-    * REQUIRES `graft_sig_agree` in the session's function registry: on a
-    * [[graft.GraftSession]] (or any session built with GraftExtensions)
-    * it is a built-in; a Column-only API has no session to thread the
-    * registration through, so on a foreign SparkSession call
-    * `graft.functions.SigAgreeCount.register(spark)` once first —
-    * otherwise analysis fails with "undefined function". The same
-    * contract applies to [[graft.sim.Similarity.cosine]]
-    * (`GraftFunctions.register`) and [[graft.text.UnicodeNorm]]'s nfc
-    * column (`NfcNormalize.register`). */
+    * millions of candidates. `graft_sig_agree` is a session built-in via
+    * [[graft.GraftExtensions]]. */
   def minHashJaccard(sigA: Column, sigB: Column): Column =
-    // graft_sig_agree is a session built-in via GraftExtensions; foreign
-    // sessions register it once with SigAgreeCount.register(spark)
     call_function(graft.functions.SigAgreeCount.Name, sigA, sigB).cast("double") /
       size(sigA).cast("double")
 
@@ -398,7 +387,7 @@ object Dedup {
   def tokenJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         threshold: Double): DataFrame =
     jaccardPairsOfSets(df, idCol,
-      shingleSet(df, TextAnalysis.tokens(col(textCol)), 1), threshold)
+      shingleSet(TextAnalysis.tokens(col(textCol)), 1), threshold)
 
   /** Exact Jaccard pairs over word n-GRAM shingle sets — substring-aware
     * near-dup detection (reordered documents share token sets but not
@@ -407,7 +396,7 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int, threshold: Double): DataFrame =
     jaccardPairsOfSets(df, idCol,
-      shingleSet(df, TextAnalysis.tokens(col(textCol)), n), threshold)
+      shingleSet(TextAnalysis.tokens(col(textCol)), n), threshold)
 
   /** The sorted distinct shingle set as ONE native codegen pass
     * ([[graft.functions.ShingleSet]]) — the declarative
@@ -421,12 +410,9 @@ object Dedup {
     * retained as null. Safe for every in-repo caller
     * ([[graft.text.TextAnalysis.tokens]] never yields null elements);
     * a general `array<string>` caller with containsNull inputs must
-    * strip nulls first. Registration is threaded through the df's own
-    * session — never `SparkSession.active`. */
-  private def shingleSet(df: DataFrame, toks: Column, n: Int): Column = {
-    graft.functions.ShingleSet.register(df.sparkSession)
+    * strip nulls first. */
+  private def shingleSet(toks: Column, n: Int): Column =
     call_function(graft.functions.ShingleSet.Name, toks, lit(n))
-  }
 
   /** `(id, set)` rows with empty sets dropped, not paired: Jaccard over
     * two empty sets is 0/0 — and without this filter the exact-group
@@ -634,7 +620,7 @@ object Dedup {
     // Spark-rounded 4-dp similarity)
     val localRows =
       collectIfSmall(docSetsOf(df, idCol,
-        shingleSet(df, TextAnalysis.tokens(col(textCol)), n)))
+        shingleSet(TextAnalysis.tokens(col(textCol)), n)))
     if (localRows.isDefined) {
       val localPairs = LocalJaccard.jaccardPairs(localRows.get, taus.min).map {
         case (a, b, j) => (a, b, java.math.BigDecimal.valueOf(j)
@@ -766,7 +752,7 @@ object Dedup {
   def ngramJaccardComponents(df: DataFrame, idCol: String, textCol: String,
                              n: Int, threshold: Double): DataFrame =
     jaccardComponentsOfSets(df, idCol,
-      shingleSet(df, TextAnalysis.tokens(col(textCol)), n), threshold)
+      shingleSet(TextAnalysis.tokens(col(textCol)), n), threshold)
 
   /** Rep-level ≥ τ Jaccard graph: returns `(repPairs, mem)` where
     * `repPairs(id_a, id_b, jaccard)` joins one representative per
@@ -775,7 +761,6 @@ object Dedup {
     * the clustering path. */
   private def repJaccardGraph(df: DataFrame, idCol: String, setExpr: Column,
                               threshold: Double): (DataFrame, DataFrame) = {
-    graft.functions.SortedOverlapCount.register(df.sparkSession)
     val docSets = docSetsOf(df, idCol, setExpr)
     // EXACT-GROUP PRE-COLLAPSE: documents with the SAME distinct token set
     // have pairwise Jaccard exactly 1.0 among themselves and identical
@@ -915,7 +900,7 @@ object Dedup {
   def ngramContainmentPairs(df: DataFrame, idCol: String, textCol: String,
                             n: Int, threshold: Double): DataFrame =
     containmentPairsOfSets(df, idCol,
-      shingleSet(df, TextAnalysis.tokens(col(textCol)), n), threshold)
+      shingleSet(TextAnalysis.tokens(col(textCol)), n), threshold)
 
   /** Core of the exact containment join. ASYMMETRIC prefix filtering:
     * because the required overlap `⌈τ·min(|A|,|B|)⌉` depends only on the
@@ -933,7 +918,6 @@ object Dedup {
     * member expansion are the same d²-reduction as the Jaccard path. */
   def containmentPairsOfSets(df: DataFrame, idCol: String, setExpr: Column,
                              threshold: Double): DataFrame = {
-    graft.functions.SortedOverlapCount.register(df.sparkSession)
     val docSets = docSetsOf(df, idCol, setExpr)
     val local = collectIfSmall(docSets)
     if (local.isDefined) {

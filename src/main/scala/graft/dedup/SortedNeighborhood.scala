@@ -73,7 +73,6 @@ object SortedNeighborhood {
   def jaroWinklerPairs(df: DataFrame, idCol: String, sortKeyExpr: Column,
                        cmpExpr: Column, window: Int, minSim: Double): DataFrame = {
     require(window >= 1, s"window must be >= 1, got $window")
-    graft.functions.JaroWinkler.register(df.sparkSession)
     val keyed = Positional.withRowIndex(
       df.select(col(idCol).as("id"), sortKeyExpr.as("__sk"), cmpExpr.as("__cmp")),
       Seq(col("__sk"), col("id")), "__rn")

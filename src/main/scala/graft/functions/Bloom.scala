@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
@@ -85,16 +84,6 @@ object Bloom {
       i += 1
     }
     true
-  }
-
-  /** Register both functions for the Column API / SQL text. Idempotent.
-    * `graft_bloom_contains` requires a LITERAL blob (the collected build
-    * side) — probing a per-row blob would re-parse per row by design. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      AggName, exprs => BloomAgg.build(exprs), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ContainsName, exprs => BloomMightContain(exprs(0), exprs(1)), "built-in")
   }
 }
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -39,7 +38,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   private def isFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
   override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_cosine"
+  override def prettyName: String = CosineSimilarity.Name
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -86,11 +85,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session registration for graft's native expressions. Idempotent. */
-object GraftFunctions {
-  val CosineName = "graft_cosine"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      CosineName, exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
+object CosineSimilarity {
+  val Name = "graft_cosine"
 }

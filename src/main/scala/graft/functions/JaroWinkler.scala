@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -57,13 +56,6 @@ case class JaroWinkler(left: Expression, right: Expression)
 object JaroWinkler {
   val Name = "graft_jaro_winkler"
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, {
-        case Seq(a, b) => JaroWinkler(a, b)
-        case exprs => throw new IllegalArgumentException(
-          s"$Name takes 2 arguments, got ${exprs.length}")
-      }, "built-in")
 
   /** Static entry shared by interpreted eval and generated code. */
   def compute(a: Array[Byte], b: Array[Byte]): Double = {

@@ -2,7 +2,6 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -151,10 +150,4 @@ object MisraGries {
     }
     MisraGries(exprs.head, k)
   }
-
-  /** Register for both the Column API (`call_function`) and SQL text —
-    * idempotent fallback for sessions built without GraftExtensions. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, build, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -109,8 +108,4 @@ case class PinnedKmeansBest(first: Expression, second: Expression, third: Expres
 
 object PinnedKmeansBest {
   val Name = "graft_kmeans_best"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => PinnedKmeansBest(exprs(0), exprs(1), exprs(2)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -135,8 +134,4 @@ case class PinnedSeedArgmin(first: Expression, second: Expression, third: Expres
 
 object PinnedSeedArgmin {
   val Name = "graft_seed_argmin"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => PinnedSeedArgmin(exprs(0), exprs(1), exprs(2)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -80,8 +79,4 @@ case class PinnedSqDist(left: Expression, right: Expression)
 
 object PinnedSqDist {
   val Name = "graft_sqdist_pinned"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => PinnedSqDist(exprs(0), exprs(1)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -90,8 +89,4 @@ object RepStats {
   // — the same hazard Dedup's set digests document; whitespace-split
   // tokens are unaffected either way
   private val Sep = UTF8String.fromString("\n")
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => RepStats(exprs.head), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -164,12 +163,4 @@ case class SortedOverlapCountBounded(left: Expression, right: Expression,
 
 object SortedOverlapCount {
   val Name = "graft_sorted_overlap"
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, {
-        case Seq(a, b) => SortedOverlapCount(a, b)
-        case Seq(a, b, m) => SortedOverlapCountBounded(a, b, m)
-        case exprs => throw new IllegalArgumentException(
-          s"$Name takes 2 or 3 arguments, got ${exprs.length}")
-      }, "built-in")
 }

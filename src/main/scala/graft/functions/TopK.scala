@@ -2,7 +2,6 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -145,8 +144,6 @@ object TopK {
     StructField("tag", LongType, nullable = false))), containsNull = false)
 
   def build(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 3,
-      s"$Name(value, tag, k) takes exactly 3 arguments, got ${exprs.length}")
     val k = exprs(2) match {
       case Literal(v: Int, IntegerType) => v
       case other => throw new IllegalArgumentException(
@@ -155,9 +152,6 @@ object TopK {
     TopK(exprs(0), exprs(1), k)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, build, "built-in")
 
   /** Heap-rank id contract: the tag is a BIGINT, so callers cast their id
     * column to long. A silent cast would NULL non-integral ids and the

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -187,10 +186,6 @@ object TrigramLmScore {
     new java.math.BigDecimal(java.lang.Double.toString(p))
       .setScale(12, java.math.RoundingMode.HALF_UP)
       .unscaledValue().longValueExact()
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => TrigramLmScore(exprs(0), exprs(1)), "built-in")
 }
 
 /** `graft_trigram_counts(canonText: string)` → binary blob of
@@ -323,8 +318,4 @@ object TrigramCountAgg {
     java.util.Arrays.sort(pairs, Ordering.by((p: (Long, Long)) => p._1))
     (pairs.map(_._1), pairs.map(_._2))
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => TrigramCountAgg(exprs.head), "built-in")
 }

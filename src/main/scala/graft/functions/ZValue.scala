@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -50,13 +49,6 @@ case class ZValue(left: Expression, right: Expression)
 object ZValue {
   val Name = "graft_zvalue"
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, {
-        case Seq(a, b) => ZValue(a, b)
-        case exprs => throw new IllegalArgumentException(
-          s"$Name takes 2 arguments, got ${exprs.length}")
-      }, "built-in")
 
   /** Spread the low 32 bits of `v` onto the even bits of a long (Morton
     * magic constants). */

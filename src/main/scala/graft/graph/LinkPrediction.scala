@@ -164,7 +164,6 @@ object LinkPrediction {
       .groupBy(col("x").as("z"))
       .agg(sort_array(collect_set(col("y"))).as("ns"))
       .where(size(col("ns")) >= 2)
-    graft.functions.SortedPairs.register(edges.sparkSession)
     val wedges = nbrs
       .select(
         round(lit(1e12) / log(size(col("ns")).cast("double"))).cast("long")

@@ -1,6 +1,5 @@
 package graft.mine
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -89,10 +88,4 @@ object DrainMineAgg {
     StructField("eventId", LongType, nullable = false),
     StructField("size", LongType, nullable = false),
     StructField("template", StringType, nullable = false))), containsNull = false)
-
-  /** Register `graft_mine` for both the Column API (`call_function`) and
-    * `spark.sql` text. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => DrainMineAgg(exprs.head), "built-in")
 }

@@ -102,7 +102,6 @@ object Mixture {
   def capPerGroup(df: DataFrame, groupCol: String, idCol: String,
                   k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    graft.functions.TopK.register(df.sparkSession)
     df.select(col(groupCol), col(idCol).cast("long").as("__id"))
       .groupBy(col(groupCol))
       .agg(call_function(graft.functions.TopK.Name,

@@ -23,7 +23,6 @@ object RuntimeFilter {
     * build-side aggregate now. */
   def bloomLiteral(dim: DataFrame, dimKey: String,
                    numBits: Int = 1 << 22, k: Int = 5): Column = {
-    Bloom.register(dim.sparkSession)
     val blob = dim
       .select(xxhash64(col(dimKey)).as("h"))
       .agg(call_function(Bloom.AggName, col("h"), lit(numBits), lit(k)).as("b"))
@@ -35,7 +34,6 @@ object RuntimeFilter {
     * FP fraction ~(1 - e^{-kn/m})^k of non-joining rows. */
   def prune(fact: DataFrame, factKey: String, dim: DataFrame, dimKey: String,
             numBits: Int = 1 << 22, k: Int = 5): DataFrame = {
-    Bloom.register(fact.sparkSession)
     fact.filter(call_function(Bloom.ContainsName,
       bloomLiteral(dim, dimKey, numBits, k), xxhash64(col(factKey))))
   }

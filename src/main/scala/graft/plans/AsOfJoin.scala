@@ -155,9 +155,8 @@ object AsOfJoin {
   def asOf(spark: SparkSession, leftDf: DataFrame, rightDf: DataFrame,
            keyCol: String, tsCol: String,
            leftValCol: String, rightValCol: String): DataFrame = {
-    // idempotent fallback for sessions built without GraftExtensions —
-    // mirrors the per-operator function registration pattern. planner
-    // .strategies already folds in extension-injected strategies AND
+    // idempotent fallback for sessions built without GraftExtensions.
+    // planner.strategies already folds in extension-injected strategies AND
     // experimental.extraStrategies, so this single check covers both
     // registration paths without double-adding on a GraftSession.
     if (!spark.sessionState.planner.strategies.contains(AsOfJoinStrategy))

@@ -26,8 +26,6 @@ object Anisotropy {
 
   /** One row: `(n, dim, mean_cos)`. */
   def meanCosine(df: DataFrame, vecCol: String): DataFrame = {
-    val spark = df.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val withNorm = df
       .select(col(vecCol).cast("array<double>").as("v"))
       // per-row squared norm as an exact 12-dp long fold — engine log

@@ -51,7 +51,6 @@ object Dbscan {
               eps: Double, minPts: Int): DataFrame = {
     require(eps > 0, s"eps must be positive: $eps")
     require(minPts >= 1, s"minPts must be >= 1: $minPts")
-    graft.functions.SqEuclidean.register(df.sparkSession) // foreign-session fallback
     val pts = graft.operators.Spread.widen(
       df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"),
         floor(element_at(col(vecCol), 1).cast("double") / eps).as("cx"),

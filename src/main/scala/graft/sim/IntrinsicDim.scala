@@ -36,7 +36,6 @@ object IntrinsicDim {
   /** One row: `(n_used, n_dropped, id_mle)` (id_mle at 4 dp; NULL when
     * no usable points or Σln μ = 0). `k`-th neighbor ties break by id. */
   def twoNn(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    graft.functions.PinnedCosine.register(df.sparkSession)
     val pts = graft.operators.Spread.widen(
       df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v")),
       col("id"))

@@ -40,7 +40,6 @@ object KCenter {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = df.sparkSession
     import spark.implicits._
-    graft.functions.PinnedSqDist.register(spark)
     val base = df.select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -73,7 +73,6 @@ object Lof {
     * [[kdistProfile]]. */
   private[sim] def bucketedPairs(df: DataFrame, idCol: String,
                                  vecCol: String, nSeeds: Int): DataFrame = {
-    val spark = df.sparkSession
     val pts = graft.operators.Spread.widen(
       df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v")),
       col("id"))
@@ -99,7 +98,6 @@ object Lof {
     // hash form) — nSeeds× the corpus sorted and re-folded at any
     // scale. Seeds (the nSeeds lowest-id vectors) are bounded driver
     // state by construction.
-    graft.functions.PinnedSeedArgmin.register(spark)
     val seedRows = pts.orderBy(col("id")).limit(nSeeds)
       .select(col("id"), col("v")).collect()
     if (seedRows.isEmpty) {

@@ -22,7 +22,7 @@ object Matryoshka {
 
   /** The session-registered native expression ([[graft.GraftExtensions]]). */
   private def cos(a: Column, b: Column): Column =
-    call_function(graft.functions.GraftFunctions.CosineName, a, b)
+    call_function(graft.functions.CosineSimilarity.Name, a, b)
 
   /** `(dim, n_pairs, mean_abs_dcos, mean_cos_full)` over pairs
     * `(id, id+1)` for even `id`, for each prefix width in `dims`. */

@@ -23,9 +23,7 @@ object Similarity {
   /** Cosine similarity of two float-array columns, computed in double by
     * the native codegen'd [[graft.functions.CosineSimilarity]] expression. */
   def cosine(a: Column, b: Column): Column =
-    // graft_cosine is a session built-in via GraftExtensions; foreign
-    // sessions register it once with GraftFunctions.register(spark)
-    call_function(graft.functions.GraftFunctions.CosineName, a, b)
+    call_function(graft.functions.CosineSimilarity.Name, a, b)
 
   /** Built-ins-only variant (`zip_with` + `aggregate`) — same arithmetic
     * order, kept as the portable fallback and for plan comparison. */
@@ -126,7 +124,6 @@ object Similarity {
                                k: Int, iters: Int): Option[PinnedLloydFit] = {
     val spark = df.sparkSession
     def raL(x: Double): Long = if (x >= 0) math.round(x) else -math.round(-x)
-    graft.functions.PinnedKmeansBest.register(spark)
     // compact per-point pinned frame (one row per vector: 1e-6-grid
     // coordinate array + exact squared norm). The exploded-join
     // formulation this replaces paid 4-5 shuffle stages PER ITERATION
@@ -336,7 +333,6 @@ object Similarity {
     * non-integral id and the heap skips nulls. */
   private def rankTopKByQid(scored: DataFrame, k: Int): DataFrame = {
     graft.functions.TopK.requireIntegralId(scored, "id", "rankTopKByQid")
-    graft.functions.TopK.register(scored.sparkSession)
     scored.groupBy(col("qid"))
       .agg(call_function(graft.functions.TopK.Name,
         col("sim"), col("id").cast("long"), lit(k)).as("top"))
@@ -504,7 +500,6 @@ object Similarity {
         // top-nProbe centroids per query via the bounded heap (exact
         // integer dot9 < 2^53 is order-exact as a double; ties to the
         // lowest centroid index = tag ASC, the window order)
-        graft.functions.TopK.register(data.sparkSession)
         val probed = probed0
           .groupBy(col("qid"))
           .agg(first(col("qv")).as("qv"),

@@ -73,7 +73,6 @@ object Sinks {
     * in-partition sort; the z column itself never hits disk. */
   def writeZOrdered(df: DataFrame, path: String, xCol: String, yCol: String,
                     nFiles: Int): Unit = {
-    graft.functions.ZValue.register(df.sparkSession)
     df.withColumn("__z", org.apache.spark.sql.functions.call_function(
         graft.functions.ZValue.Name,
         org.apache.spark.sql.functions.col(xCol).cast("long"),

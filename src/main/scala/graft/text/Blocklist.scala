@@ -50,8 +50,6 @@ object Blocklist {
     if (byLen.isEmpty)
       return docs.select(col(idCol), lit(0L).as("n_hits"),
         lit(0L).as("n_distinct_phrases"), lit(false).as("blocked"))
-    graft.functions.ShingleList.register(docs.sparkSession)
-    graft.functions.VocabTf.register(docs.sparkSession)
     def grams(n: Int): Column =
       if (n == 1) col("__toks")
       else call_function(graft.functions.ShingleList.Name, col("__toks"), lit(n))

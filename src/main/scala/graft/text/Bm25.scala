@@ -163,7 +163,6 @@ object Bm25 {
     * order, and (value DESC, tag ASC) is the window's exact tie order. */
   private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
     graft.functions.TopK.requireIntegralId(scored, "id", "Bm25.rankTopK")
-    graft.functions.TopK.register(scored.sparkSession)
     scored.groupBy(col("qid"))
       .agg(call_function(graft.functions.TopK.Name,
         col("score_p").cast("double"), col("id").cast("long"), lit(k)).as("top"))

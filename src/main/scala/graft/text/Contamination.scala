@@ -31,7 +31,6 @@ object Contamination {
   def ngramContainment(corpus: DataFrame, probes: DataFrame,
                        idCol: String, textCol: String, n: Int,
                        minContainment: Double): DataFrame = {
-    graft.functions.ShingleSet.register(corpus.sparkSession)
     def shingleSet(df: DataFrame, outId: String) =
       // native codegen shingle set (sorted distinct — order is irrelevant
       // to the exploded join): the declarative transform+array_distinct
@@ -74,7 +73,6 @@ object Contamination {
     * document, novelty rounded to 4 dp. */
   def ngramNovelty(corpus: DataFrame, reference: DataFrame,
                    idCol: String, textCol: String, n: Int): DataFrame = {
-    graft.functions.ShingleSet.register(corpus.sparkSession)
     // native codegen shingle set (sorted distinct — order is irrelevant
     // to the per-doc counts)
     def staged(df: DataFrame) =

@@ -38,8 +38,6 @@ object Cooccurrence {
   def pmiPairs(docs0: DataFrame, idCol: String, textCol: String,
                vocab: Int, minSupport: Long, k: Int): DataFrame = {
     val spark = docs0.sparkSession
-    graft.functions.VocabTf.register(spark)
-    graft.functions.SortedPairs.register(spark)
     // tokenize ONCE into a persisted per-doc token frame (the perDocTf
     // precedent): the df aggregate, the corpus count and the
     // VocabTf+SortedPairs pair projection all read it — the tokenizer

@@ -46,7 +46,6 @@ object CorpusStats {
     * one global partial-merged rollup of the count histogram. Nothing is
     * collected; the widest shuffle key is one shingle string. */
   def dupNgramStats(df: DataFrame, textCol: String, n: Int): DataFrame = {
-    graft.functions.ShingleList.register(df.sparkSession)
     // native codegen shingle LIST (duplicates kept — multiplicity is the
     // signal here); the declarative HOF evaluated interpreted per position
     val grams = df.select(TextAnalysis.tokens(col(textCol)).as("toks"))
@@ -131,7 +130,6 @@ object CorpusStats {
     * gram-less documents). */
   def ngramDiversity(df: DataFrame, groupCol: String, textCol: String,
                      n: Int): DataFrame = {
-    graft.functions.ShingleList.register(df.sparkSession)
     val pairs = df.select(col(groupCol).as("g"),
         TextAnalysis.tokens(col(textCol)).as("__toks"))
       .select(col("g"),

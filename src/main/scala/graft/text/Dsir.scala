@@ -42,7 +42,6 @@ object Dsir {
     require(buckets > 0 && alpha > 0 && k > 0,
       s"need buckets, alpha, k > 0: $buckets, $alpha, $k")
     val spark = df.sparkSession
-    graft.functions.ShingleList.register(spark)
     // feature stream: one row per unigram + bigram INSTANCE (duplicates
     // kept — c_d[b] is an occurrence count), hashed to its bucket
     def feats = df

@@ -81,9 +81,6 @@ object NgramLm {
     * Documents shorter than 3 canonical chars score null. Native scoring
     * path — train and score share one staged corpus scan. */
   def score(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val spark = df.sparkSession
-    TrigramLmScore.register(spark)
-    graft.functions.TrigramCountAgg.register(spark)
     val staged = df.select(col(idCol), canon(col(textCol)).as("__t"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {

@@ -66,7 +66,6 @@ object Postings {
     * sf0.1 against ~0.15 s per extra scan). */
   def perDocTfUncached(corpus: DataFrame, idCol: String, textCol: String,
                        vocab: Array[String]): DataFrame = {
-    graft.functions.VocabTf.register(corpus.sparkSession)
     graft.operators.Spread.widen(corpus, col(idCol))
       .select(col(idCol).as("id"), TextAnalysis.tokens(col(textCol)).as("__toks"))
       .select(col("id"), size(col("__toks")).cast("long").as("dl"),

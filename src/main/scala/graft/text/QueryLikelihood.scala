@@ -98,7 +98,6 @@ object QueryLikelihood {
     // the pico score stays < 2^53 so the double heap key is
     // order-exact, ties to the lowest doc id = tag ASC
     graft.functions.TopK.requireIntegralId(sparse, "id", "QueryLikelihood")
-    graft.functions.TopK.register(perDoc.sparkSession)
     sparse.join(broadcast(qconst), "qid")
       .withColumn("score12",
         col("aq12") - col("nq") *

@@ -32,7 +32,6 @@ object Repetition {
     * most frequent 2-gram; null for docs of < 2 tokens) — each rounded
     * to 4 dp (double division of exact ints: deterministic IEEE). */
   def tokenStats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.RepStats.register(df.sparkSession)
     val st = call_function(graft.functions.RepStats.Name, toks(col(textCol)))
     val n = col("st").getField("n_tokens")
     df.select(col(idCol), st.as("st"))

@@ -51,7 +51,6 @@ object RetrievalEval {
     // query in one task; overlap counts are integral (< 2^53), ties to
     // the lowest doc id = tag ASC, the window's order
     graft.functions.TopK.requireIntegralId(scored, "doc", "RetrievalEval")
-    graft.functions.TopK.register(docs.sparkSession)
     val ranked = scored
       .groupBy(col("qid"))
       .agg(call_function(graft.functions.TopK.Name,

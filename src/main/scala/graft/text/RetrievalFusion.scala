@@ -125,7 +125,6 @@ object RetrievalFusion {
     // 2.4 + 5.6 CPU-s at sf0.1 for identical grouping work); the fused
     // result is query-bounded (one row per qid), so its checkpoint is
     // free and the explode branches replay kilobytes.
-    graft.functions.TopK.register(corpus.sparkSession)
     def heap(valueCol: Column) = call_function(graft.functions.TopK.Name,
       valueCol.cast("double"), col("doc_id").cast("long"), lit(k))
     val tops = scored.groupBy(col("qid"))

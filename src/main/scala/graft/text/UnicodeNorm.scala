@@ -16,10 +16,8 @@ import org.apache.spark.sql.functions._
   */
 object UnicodeNorm {
 
-  /** Unicode NFC canonical composition (native `graft_nfc`). The function
-    * is a session built-in via [[graft.GraftExtensions]]; a foreign
-    * session (built without the extensions) registers it once with
-    * `NfcNormalize.register(spark)`. */
+  /** Unicode NFC canonical composition (native `graft_nfc`, a session
+    * built-in via [[graft.GraftExtensions]]). */
   def nfc(c: Column): Column =
     call_function(graft.functions.NfcNormalize.Name, c)
 

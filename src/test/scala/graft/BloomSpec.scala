@@ -67,7 +67,6 @@ class BloomSpec extends AnyFunSuite {
 
   test("agg is usable from SQL text; contains rejects a non-foldable blob") {
     import spark.implicits._
-    Bloom.register(spark)
     (1L to 50L).toDF("k").createOrReplaceTempView("bloom_dim")
     val blob = spark.sql(
       s"SELECT ${Bloom.AggName}(xxhash64(k), 65536, 5) FROM bloom_dim")

@@ -160,29 +160,7 @@ class DrainPropertySpec extends AnyFunSuite {
   }
 }
 
-class DrainAggregatorSpec extends AnyFunSuite {
-  test("Aggregator surface mines the corpus with mass conservation") {
-    assume(GoldenFixture.available)
-    val spark = TestSession.spark
-    import spark.implicits._
-    val ds = spark.createDataset(GoldenFixture.lines())
-    val out = ds.select(graft.mine.DrainAggregator().toColumn).head()
-    assert(out.map(_.size).sum == 1282L)
-    val exact = GoldenFixture.golden().size
-    assert(out.size.toDouble / exact > 0.5 && out.size.toDouble / exact < 2.0)
-  }
-
-  test("Aggregator per-key mining via groupByKey") {
-    assume(GoldenFixture.available)
-    val spark = TestSession.spark
-    import spark.implicits._
-    val ds = spark.createDataset(GoldenFixture.lines().zipWithIndex.map { case (l, i) => (i % 2, l) })
-    val out = ds.groupByKey(_._1).mapValues(_._2)
-      .agg(graft.mine.DrainAggregator().toColumn).collect()
-    assert(out.length == 2)
-    assert(out.map(_._2.map(_.size).sum).sum == 1282L)
-  }
-
+class TemplateMiningSpec extends AnyFunSuite {
   test("exactMatchCounts: deterministic digit-mask equi-join — mass " +
        "conserved, ids dense by template order, partitioning-invariant") {
     val spark = TestSession.spark

@@ -25,6 +25,17 @@ class EntrySpec extends AnyFunSuite {
     }
   }
 
+  test("the SQL-surface queries leave no temp view in the caller's session") {
+    val fresh = spark.newSession()
+    Seq("q41_sql_surface", "q92_grouping_sets", "q184_sql_lateral", "q49_group_mine")
+      .foreach { name =>
+        val df = SparkEntry.queries(name)(fresh, TestSession.sf)
+        val views = fresh.catalog.listTables().collect().filter(_.isTemporary).map(_.name)
+        assert(views.isEmpty, s"$name left temp views: ${views.mkString(", ")}")
+        assert(df.count() > 0, s"$name returned no rows once its views were dropped")
+      }
+  }
+
   test("every oracle key has a matching query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle entries without queries: $missing")

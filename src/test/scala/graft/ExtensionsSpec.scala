@@ -2,6 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions._
+import graft.mine.DrainMineAgg
+
 /** GraftExtensions: the native surface resolves from bare SQL text in a
   * session wired via `withExtensions` — no per-query registration. */
 class ExtensionsSpec extends AnyFunSuite {
@@ -29,6 +32,28 @@ class ExtensionsSpec extends AnyFunSuite {
       "SELECT graft_seed_argmin(array(0.0D, 1.0D), array(10L, 20L), " +
         "array(array(1.0D, 0.0D), array(0.0D, 1.0D))) AS s").head().getLong(0)
     assert(seed == 20L)
+  }
+
+  test("a fresh newSession() resolves all 23 functions, each through its one builder") {
+    val fresh = spark.newSession()
+    val names = Seq(CosineSimilarity.Name, SortedOverlapCount.Name, SigAgreeCount.Name,
+      DrainMineAgg.Name, MisraGries.Name, RepStats.Name, NfcNormalize.Name, TopK.Name,
+      ShingleSet.Name, ShingleList.Name, TrigramLmScore.Name, TrigramCountAgg.Name,
+      JaroWinkler.Name, VocabTf.Name, SortedPairs.Name, SqEuclidean.Name,
+      PinnedCosine.Name, PinnedSqDist.Name, PinnedKmeansBest.Name, PinnedSeedArgmin.Name,
+      ZValue.Name, Bloom.AggName, Bloom.ContainsName)
+    assert(names.distinct.size == 23)
+    val missing = names.filterNot(fresh.catalog.functionExists)
+    assert(missing.isEmpty, s"not resolvable in a fresh session: $missing")
+    // the 3-argument form is the bounded overlap: with m = 3 the two
+    // shared elements cannot reach it, so the early exit returns 0
+    val bounded = fresh.sql("SELECT graft_sorted_overlap(array(1, 3, 5), " +
+      "array(3, 4, 5), CAST(3 AS DOUBLE)) AS c")
+    assert(bounded.queryExecution.analyzed.expressions
+      .exists(_.exists(_.isInstanceOf[SortedOverlapCountBounded])))
+    assert(bounded.head().getLong(0) == 0L)
+    val err = intercept[Exception](fresh.sql("SELECT graft_jaro_winkler('abc')"))
+    assert(err.getMessage.contains(JaroWinkler.Name), err.getMessage)
   }
 
   test("CollapseNfc optimizer rule eliminates nested nfc applications") {

@@ -70,7 +70,6 @@ class GapDimSpec extends AnyFunSuite {
 
   test("pinned cosine: adversarial near-ties resolve identically to the integer reference") {
     import spark.implicits._
-    graft.functions.PinnedCosine.register(spark)
     // b and c are built so their UNPINNED cosines to a differ only in
     // the last ulps (a sub-1e-15 perturbation on one component): the
     // exact engine-side accumulation order decides which is "nearer" on

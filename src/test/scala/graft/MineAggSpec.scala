@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.mine.DrainMineAgg
+import graft.mine.{DrainConfig, DrainMineAgg, EventTemplate, TemplateMining}
 import graft.sources.Tables
 
 /** `graft_mine` — M1 as a native TypedImperativeAggregate. */
@@ -11,7 +11,6 @@ class MineAggSpec extends AnyFunSuite {
 
   test("graft_mine folds the three line families on one partition") {
     import spark.implicits._
-    DrainMineAgg.register(spark)
     val lines =
       (1 to 40).map(i => s"task $i started") ++
       (1 to 25).map(i => s"job $i failed code ${i % 7}") ++
@@ -28,7 +27,6 @@ class MineAggSpec extends AnyFunSuite {
   }
 
   test("graft_mine per-group in SQL conserves mass under parallel merge") {
-    DrainMineAgg.register(spark)
     Tables.documents(spark, TestSession.sf).createOrReplaceTempView("documents")
     val out = spark.sql(
       """WITH mined AS (
@@ -49,13 +47,20 @@ class MineAggSpec extends AnyFunSuite {
 
   test("graft_mine matches mineParallel's cluster content on the same input") {
     import spark.implicits._
-    DrainMineAgg.register(spark)
-    val docs = Tables.documents(spark, TestSession.sf).limit(200).cache()
-    val viaAgg = docs.agg(call_function(DrainMineAgg.Name, col("text")).as("ts"))
+    // one partition and no partial merge: graft_mine, mineParallel and a
+    // sequential tree fold the same lines in the same order
+    val lines = Tables.documents(spark, TestSession.sf).orderBy(col("doc_id"))
+      .limit(200).select(col("text")).as[String].collect().toSeq
+    val df = lines.toDF("text").coalesce(1)
+    def content(ts: Seq[EventTemplate]) = ts.map(t => (t.template, t.size)).sorted
+    val viaAgg = df.agg(call_function(DrainMineAgg.Name, col("text")).as("ts"))
       .select(explode(col("ts")).as("t"))
       .select(col("t.template"), col("t.size"))
-      .as[(String, Long)].collect().toMap
-    assert(viaAgg.values.sum == 200, "mass conservation")
-    docs.unpersist()
+      .as[(String, Long)].collect().toSeq.sorted
+    val tree = DrainConfig().newTree()
+    lines.foreach(l => tree.addLogMessage(if (l == null) "" else l))
+    assert(viaAgg.map(_._2).sum == 200, "mass conservation")
+    assert(viaAgg == content(TemplateMining.mineParallel(df, "text").collect().toSeq))
+    assert(viaAgg == content(tree.clusters))
   }
 }

@@ -23,7 +23,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("graft_shingle_set equals the declarative sorted-distinct formulation") {
-    ShingleSet.register(spark)
     val docs = Seq(
       "the quick brown fox jumps over the lazy dog",
       "the the the the",
@@ -43,7 +42,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("graft_shingle_list equals the declarative all-occurrences formulation") {
-    graft.functions.ShingleList.register(spark)
     val docs = Seq(
       "the quick brown fox jumps over the lazy dog",
       "the the the the",            // duplicates MUST be kept, in order
@@ -63,7 +61,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("graft_shingle_set orders supplementary characters like array_sort") {
-    ShingleSet.register(spark)
     // U+1F600 (surrogate pair, UTF-16 units start 0xD83D) vs U+FFFD:
     // java.lang.String order would put the emoji FIRST; UTF8String binary
     // order (array_sort's) puts it LAST. The native set must match
@@ -78,7 +75,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("graft_shingle_set null/empty edges") {
-    ShingleSet.register(spark)
     val df = Seq((1L, Some(Seq("a", "b", "c"))), (2L, None), (3L, Some(Seq.empty[String])))
       .toDF("id", "toks")
     val got = df.select(col("id"),
@@ -107,7 +103,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("native LM scoring subtree contains no Generate (no per-char explode)") {
-    TrigramLmScore.register(spark)
     val staged = Seq((1L, "abcabc"), (2L, "abcd")).toDF("doc_id", "t")
     val model = NgramLm.train(staged, "t", "doc_id").collect()
     val packed = model.map { r =>
@@ -138,7 +133,6 @@ class NativeExprSpec extends AnyFunSuite {
   // ----------------------------------------------------- JaroWinkler
 
   test("graft_jaro_winkler matches DuckDB jaro_winkler_similarity case table") {
-    graft.functions.JaroWinkler.register(spark)
     // expected values generated by DuckDB's jaro_winkler_similarity —
     // the oracle engine for q134 (10-decimal pins)
     val cases = Seq(
@@ -176,7 +170,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("graft_jaro_winkler null handling and codegen/interpreted agreement") {
-    graft.functions.JaroWinkler.register(spark)
     val df = Seq((Option("abc"), Option.empty[String])).toDF("a", "b")
     val r = df.select(call_function(graft.functions.JaroWinkler.Name,
       col("a"), col("b"))).collect().head
@@ -204,7 +197,6 @@ class NativeExprSpec extends AnyFunSuite {
   // ------------------------------------------------------------- VocabTf
 
   test("graft_vocab_tf equals the declarative explode+semi-join tf build") {
-    graft.functions.VocabTf.register(spark)
     val vocab = Array("the", "fox", "dog", "absent phrase")
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
@@ -235,7 +227,6 @@ class NativeExprSpec extends AnyFunSuite {
   // --------------------------------------------------------- SortedPairs
 
   test("graft_sorted_pairs emits every a<b pair in binary order") {
-    graft.functions.SortedPairs.register(spark)
     val got = Seq(Tuple1(Seq("c", "a", "b")), Tuple1(Seq("x")), Tuple1(Seq.empty[String]))
       .toDF("arr")
       .select(explode(call_function(graft.functions.SortedPairs.Name, col("arr"))).as("p"))

@@ -158,13 +158,14 @@ class ParquetReaderSpec extends AnyFunSuite {
       val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
       val q47 = SparkEntry.queries("q47_log_pipeline")
       def total(): Long = q47(spark, dir.toString).collect().map(_.getLong(1)).sum
-      try {
-        documents(20, "alpha").write.parquet(s"$dir/documents.parquet")
-        assert(total() == 20L)
-        documents(35, "beta").write.mode("overwrite").parquet(s"$dir/documents.parquet")
-        assert(total() == 35L)
-      } finally tmp.listFiles().filter(_.getName.startsWith(corpusPrefix))
-        .foreach(f => deleteTree(f.toPath))
+      documents(20, "alpha").write.parquet(s"$dir/documents.parquet")
+      assert(total() == 20L)
+      documents(35, "beta").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      assert(total() == 35L)
+      // the corpus of the first listing went when the second was built
+      val corpora = tmp.listFiles().filter(_.getName.startsWith(corpusPrefix))
+      assert(corpora.length == 1, corpora.map(_.getName).mkString(", "))
+      deleteTree(corpora.head.toPath) // the cache of a dir about to go
     }
   }
 }

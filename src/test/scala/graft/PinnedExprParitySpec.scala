@@ -23,7 +23,6 @@ class PinnedExprParitySpec extends AnyFunSuite {
 
   test("PinnedKmeansBest: eval matches the codegen'd DataFrame path") {
     import spark.implicits._
-    PinnedKmeansBest.register(spark)
     val cents: Seq[Seq[Long]] =
       Seq(Seq(1000000000L, 0L), Seq(0L, 1000000000L), Seq(707106781L, 707106781L))
     val rows = Seq(
@@ -53,7 +52,6 @@ class PinnedExprParitySpec extends AnyFunSuite {
 
   test("PinnedSeedArgmin: eval matches codegen; ties break to the smaller seed id") {
     import spark.implicits._
-    PinnedSeedArgmin.register(spark)
     // seed 7 and seed 9 are IDENTICAL vectors: every point ties between
     // them and must pick 7 (ascending-id seed order, strict improvement)
     val sids: Seq[Long] = Seq(7L, 9L, 11L)

@@ -12,7 +12,6 @@ class TopKSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def viaTopK(df: org.apache.spark.sql.DataFrame, k: Int) = {
-    TopK.register(spark)
     df.groupBy("g")
       .agg(call_function(TopK.Name, col("v"), col("id"), lit(k)).as("top"))
       .select(col("g"), posexplode(col("top")))

@@ -35,7 +35,6 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("graft_zvalue resolves in SQL and matches the static computation") {
     import spark.implicits._
-    ZValue.register(spark)
     val got = Seq((10L, 6L), (255L, 255L), (1000L, 1L))
       .toDF("x", "y")
       .selectExpr("x", "y", s"${ZValue.Name}(x, y) AS z")
