@@ -33,7 +33,7 @@ object Bench {
     // artifact — an ad-hoc 5-query iteration must not clobber the
     // committed full-suite BENCH_FULL.json
     val archive = !isChild && (only.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_OUT"))
-    if (isChild || sys.env.get("SPARK_GRAFT_BENCH_FORK").contains("0")) {
+    if (isChild) {
       val (results, sentinels) = runInProcess(sfDir, selected)
       val line = renderLine(results, selected, isChild, sfDir, sentinels)
       println(line)
@@ -57,7 +57,7 @@ object Bench {
     * and a truncated total must be recognizable as truncated). */
   private def renderLine(results: Seq[(String, Double, Boolean)],
                          selected: Seq[String], isChild: Boolean, sfDir: String,
-                         sentinels: Seq[(String, Double)] = Nil): String = {
+                         sentinels: Seq[(String, Double)]): String = {
     val ran = results.map(_._1).toSet
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -295,7 +295,7 @@ object Bench {
     }
   }
 
-  /** The in-JVM loop (child mode / SPARK_GRAFT_BENCH_FORK=0 escape hatch).
+  /** The in-JVM loop of child mode.
     * Also times one pinned floor query (the contention sentinel) after
     * warmup — plus, when SPARK_GRAFT_BENCH_HEAVY_SENTINEL=1 (set by the
     * orchestrator for heavy-tier groups), one pinned CPU-BOUND query —
@@ -316,24 +316,15 @@ object Bench {
     locally {
       import org.apache.spark.sql.functions._
       spark.read.parquet(s"${sfDir.stripSuffix("/")}/region.parquet").count()
-      spark.read.parquet(s"${sfDir.stripSuffix("/")}/lineitem.parquet")
-        .limit(1000).write.mode("overwrite").format("noop").save()
+      QueryRun.noop(spark.read.parquet(s"${sfDir.stripSuffix("/")}/lineitem.parquet")
+        .limit(1000))
       val nat = spark.read.parquet(s"${sfDir.stripSuffix("/")}/nation.parquet")
       val reg = spark.read.parquet(s"${sfDir.stripSuffix("/")}/region.parquet")
-      nat.join(broadcast(reg), nat("n_regionkey") === reg("r_regionkey"))
+      QueryRun.noop(nat.join(broadcast(reg), nat("n_regionkey") === reg("r_regionkey"))
         .groupBy(nat("n_regionkey")).agg(count(lit(1)).as("n"))
         .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.orderBy(col("n"), col("n_regionkey"))))
-        .write.mode("overwrite").format("noop").save()
+          org.apache.spark.sql.expressions.Window.orderBy(col("n"), col("n_regionkey")))))
     }
-    // noop-format write: materializes EVERY result row through the full
-    // plan (count() lets Catalyst elide final sorts and column projects);
-    // a crashed query is reported as a failure, never as a fast time.
-    // Per-query warm run at the smallest SF first: compiles the query's own
-    // whole-stage codegen and JITs its hot paths, so the timed run at the
-    // target SF measures data-proportional engine work, not first-run JVM
-    // costs (cold-vs-warm measured ~1 s of fixed overhead per query).
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM_DIR", "/root/testdata/sf0.001")
     // contention sentinels, warmed then timed at the target SF. The floor
     // one (scan+filter+project) catches scheduler-level contention; its
     // absolute value is the session floor. Heavy-tier groups ALSO time a
@@ -343,13 +334,8 @@ object Bench {
     // cost doesn't move when a CPU-bound stage loses cores.
     def timeSentinel(name: String): Option[(String, Double)] =
       SparkEntry.queries.get(name).map { fn =>
-        if (new java.io.File(warmDir).isDirectory)
-          try fn(spark, warmDir).write.mode("overwrite").format("noop").save()
-          catch { case _: Throwable => () }
-        val s0 = System.nanoTime()
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () }
-        (System.nanoTime() - s0) / 1e9
+        QueryRun.warm(fn(spark, _))
+        QueryRun.timed(fn(spark, sfDir))._1
       }.map((name, _))
     val sentinels =
       timeSentinel("q02_filter_project").map { case (_, t) => ("child", t) }.toSeq ++
@@ -358,24 +344,11 @@ object Bench {
       else Nil)
     val results = selected.map { name =>
       val fn = SparkEntry.queries(name)
-      if (new java.io.File(warmDir).isDirectory)
-        try fn(spark, warmDir).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () }
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // Inter-query hygiene for multi-query child runs: drop leaked caches
-      // and nudge the ContextCleaner, OUTSIDE the timed window. (With the
-      // default one-query-per-JVM forking this is moot, but the in-process
-      // mode remains available for local iteration.)
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
-      (name, dt, ok)
+      QueryRun.warm(fn(spark, _))
+      val (dt, failure) = QueryRun.timed(fn(spark, sfDir))
+      failure.foreach(e => System.err.println(s"[bench] $name FAILED: ${e.getMessage}"))
+      QueryRun.hygiene(spark)
+      (name, dt, failure.isEmpty)
     }
     spark.stop()
     (results, sentinels)

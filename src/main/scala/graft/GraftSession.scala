@@ -93,6 +93,4 @@ object GraftSession {
       .config("spark.ui.retainedStages", RetainedUiEntries.toString)
       .config("spark.sql.ui.retainedExecutions", RetainedUiEntries.toString)
   }
-
-  def get(appName: String = "graft"): SparkSession = builder(appName).getOrCreate()
 }

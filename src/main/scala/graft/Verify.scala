@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import graft.sources.Sinks.jsonString
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -30,31 +33,17 @@ object Verify {
         failures(name) = msg.linesIterator.take(3).mkString(" ").take(500)
         System.err.println(s"[verify] $name failed: $msg")
       }
-      // same inter-query hygiene as Bench: drop leaked caches and nudge the
-      // ContextCleaner so 105 queries' shuffle/broadcast debt never
-      // accumulates into one JVM-wide stall late in the driver's run
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
+      QueryRun.hygiene(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // every control char escaped: a tab or CR in builder-authored SQL would
+    // otherwise make the driver's json.load fail and silently zero the
+    // round's correctness
     val json = SparkEntry.oracleSql.filter(kv => dumpOnly || keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // self-describing failure record (empty object on a clean run)
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"),
-      failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+      failures.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}"))
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size} queries FAILED: ${failures.keys.mkString(", ")}")
     spark.stop()

@@ -1,7 +1,6 @@
 package graft.analyze
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Extreme-value analysis: Gumbel fit to block maxima by the method of

@@ -1,6 +1,6 @@
 package graft.analyze
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-group z-score outlier tagging — the numeric-column anomaly flag of

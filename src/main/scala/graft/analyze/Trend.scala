@@ -137,7 +137,6 @@ object Trend {
       .select(col(groupCol), col("n_days"), {
         val n = col("n_days").cast("double")
         val s = col("__s").cast("double")
-        val ss = col("__ss").cast("double")
         val mean = s / n
         round(mean, 4).as("mean_daily")
       }, {

@@ -43,7 +43,7 @@ object Scc {
 
     var g = truncate(e0.filter(col("u") =!= col("v")))
     val labeled = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var selfLoopNodes = e0.filter(col("u") === col("v")).select(col("u").as("id"))
+    val selfLoopNodes = e0.filter(col("u") === col("v")).select(col("u").as("id"))
     var remaining = g.select(col("u").as("id"))
       .unionAll(g.select(col("v").as("id")))
       .unionAll(selfLoopNodes).distinct()

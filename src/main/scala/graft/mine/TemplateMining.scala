@@ -1,6 +1,6 @@
 package graft.mine
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions.col
 
 /** DataFrame-level mining operators (M1-M4 in SURVEY.md §2.6) and the

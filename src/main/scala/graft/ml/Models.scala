@@ -170,7 +170,6 @@ object Models {
   // ----------------------------------------------------------------- L10
   /** PCA over an existing Array[Float] embedding column. */
   def pcaProjectArray(df: DataFrame, vecCol: String, k: Int): DataFrame = {
-    val spark = df.sparkSession
     val toVec = udf { (v: Seq[Float]) => Vectors.dense(v.map(_.toDouble).toArray) }
     val assembled = df.withColumn("__features", toVec(col(vecCol)))
     val model = new PCA().setK(k).setInputCol("__features").setOutputCol("__pc")

@@ -96,7 +96,7 @@ object PinnedPca {
     val v0 = ra(1e9 / math.sqrt(dim.toDouble))
     var c = 0
     while (c < k) {
-      var v = Array.fill(dim)(v0)
+      val v = Array.fill(dim)(v0)
       var it = 0
       while (it < iters) {
         val w = new Array[Long](dim)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{col, count, element_at, lit, monotonically_increasing_id, spark_partition_id, typedLit}
+import org.apache.spark.sql.functions.{count, element_at, lit, monotonically_increasing_id, spark_partition_id, typedLit}
 import org.apache.spark.sql.types.LongType
 
 /** Positional (row-index) operators — W1/W2 in SURVEY.md §2.5.

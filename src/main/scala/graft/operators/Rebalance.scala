@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import graft.analyze.{TemporalSplit}
 
 /** Corpus-composition application operators — the APPLY side of the
   * mixture math in [[Mixture]] (which computes target weights, this

@@ -97,7 +97,6 @@ case class AsOfJoinExec(
     val rValB = BindReferences.bindReference(rightVal: Expression, right.output)
     val keyOrd = TypeUtils.getInterpretedOrdering(leftKey.dataType)
     val tsOrd = TypeUtils.getInterpretedOrdering(leftTs.dataType)
-    val valDt = rightVal.dataType
     val leftAttrs = left.output
     val outAttrs = output
 
@@ -155,13 +154,11 @@ object AsOfJoin {
   def asOf(spark: SparkSession, leftDf: DataFrame, rightDf: DataFrame,
            keyCol: String, tsCol: String,
            leftValCol: String, rightValCol: String): DataFrame = {
-    // idempotent fallback for sessions built without GraftExtensions.
-    // planner.strategies already folds in extension-injected strategies AND
-    // experimental.extraStrategies, so this single check covers both
-    // registration paths without double-adding on a GraftSession.
-    if (!spark.sessionState.planner.strategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    // GraftExtensions is the one path that installs the strategy; without
+    // it the plan node below could not be planned at all
+    require(spark.sessionState.planner.strategies.contains(AsOfJoinStrategy),
+      "AsOfJoinStrategy is not installed: build the session with " +
+        "spark.sql.extensions=graft.GraftExtensions (GraftSession.builder does)")
     val lp = GraftSqlBridge.analyzed(
       leftDf.select(col(keyCol), col(tsCol), col(leftValCol)))
     // re-alias the right side so a self-join never carries duplicate

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Content-addressed result cache: materialize a DataFrame keyed by the
   * SEMANTIC hash of its logical plan, so the identical query (however it

@@ -17,6 +17,19 @@ import graft.mine.EventTemplate
   */
 object Sinks {
 
+  /** `s` as a JSON string literal: quote, backslash and every control
+    * character (< 0x20) escaped, so text with a tab or CR in it still
+    * parses. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def writeCsv(df: DataFrame, path: String, single: Boolean = true): Unit = {
     val out = if (single) df.coalesce(1) else df
     out.write.mode("overwrite").option("header", "true").csv(path)
@@ -140,16 +153,9 @@ object Sinks {
     writeCsv(df, s"$path/data")
     // JSON-escape every interpolated string: a title/column containing a
     // quote or backslash must not produce an unparseable spec
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val colorField = color.map(c => s""","color":${q(c)}""").getOrElse("")
-    val spec =
-      s"""{"kind":${q(kind)},"x":${q(x)},"y":${q(y)}$colorField,"title":${q(title)},"xtickEvery":$xtickEvery}"""
+    val colorField = color.map(c => s""","color":${jsonString(c)}""").getOrElse("")
+    val spec = s"""{"kind":${jsonString(kind)},"x":${jsonString(x)},"y":${jsonString(y)}""" +
+      s"""$colorField,"title":${jsonString(title)},"xtickEvery":$xtickEvery}"""
     val dir = java.nio.file.Paths.get(path)
     java.nio.file.Files.createDirectories(dir)
     java.nio.file.Files.writeString(dir.resolve("chart.json"), spec)

@@ -1,9 +1,7 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import graft.dedup.Dedup
 
 /** Benchmark contamination detection: which corpus documents contain the
   * n-grams of a (small) evaluation/benchmark set? The pre-training gate

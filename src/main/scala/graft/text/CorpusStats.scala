@@ -416,11 +416,9 @@ object CorpusStats {
         val sx = col("__sx").cast("double") / 1e12
         val sy = col("__sy").cast("double") / 1e12
         val sxx = col("__sxx").cast("double") / 1e24
-        val syy = col("__syy").cast("double") / 1e24
         val sxy = col("__sxy").cast("double") / 1e24
         val num = n * sxy - sx * sy
         val den = n * sxx - sx * sx
-        val deny = n * syy - sy * sy
         val slope = num / den
         round(when(den > 0, slope), 6).as("slope")
       }, {

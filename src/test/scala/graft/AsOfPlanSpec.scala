@@ -121,10 +121,29 @@ class AsOfPlanSpec extends AnyFunSuite {
     val l = Seq((1L, 10L, 1L)).toDF("k", "t", "lv")
     val r = Seq((1L, 5L, 7L)).toDF("k", "t", "rv")
     AsOfJoin.asOf(spark, l, r, "k", "t", "lv", "rv").collect()
-    // GraftSession injects the strategy via injectPlannerStrategy; the
-    // experimental fallback must detect that and stay empty
+    // GraftSession injects the strategy via injectPlannerStrategy, the one
+    // path that installs it; the experimental list stays untouched
     assert(!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy),
-      "strategy registered twice: extension injection + experimental fallback")
+      "strategy registered twice: extension injection + experimental list")
+  }
+
+  test("asOf on a session built without the extensions fails and names them") {
+    // create() always builds a new session on the running context, with
+    // only the extensions its own builder names: here none
+    val bare = org.apache.spark.sql.SparkSession.builder().create()
+    try {
+      import bare.implicits._
+      val l = Seq((1L, 10L, 1L)).toDF("k", "t", "lv")
+      val r = Seq((1L, 5L, 7L)).toDF("k", "t", "rv")
+      val e = intercept[IllegalArgumentException] {
+        AsOfJoin.asOf(bare, l, r, "k", "t", "lv", "rv")
+      }
+      assert(e.getMessage.contains("spark.sql.extensions=graft.GraftExtensions"))
+      assert(bare.experimental.extraStrategies.isEmpty)
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    }
   }
 
   test("native as-of join: empty right side, unmatched keys, self-join") {
